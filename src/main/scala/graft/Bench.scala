@@ -90,25 +90,9 @@ object Bench {
     // is 40 MB of decompressed scan work, and the byte heuristic would run
     // it as one task. Sized together with maxPartitionBytes (SCALING.md).
     val openCost = sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", DefaultOpenCost)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
-      .config("spark.sql.files.openCostInBytes", openCost)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local[32] runs driver + all executor threads in ONE JVM: a long GC
-      // or a CPU-saturated stretch can starve the heartbeat thread past the
-      // 120 s default and the HeartbeatReceiver then kills the only
-      // "executor" (observed at sf1: 126 s gap → context shutdown). The
-      // same settings are standard practice on real clusters for long-pause
-      // workloads.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-bench", s"local[$cpus]", shuffle,
+      "spark.sql.files.maxPartitionBytes" -> maxPart,
+      "spark.sql.files.openCostInBytes" -> openCost)
     System.err.println(s"[bench] heap max=${Runtime.getRuntime.maxMemory / (1 << 20)} MiB" +
       s" sfDir=$sfDir shuffle=$shuffle maxPartitionBytes=$maxPart openCost=$openCost")
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The exact-vs-NN-descent BUILD CROSSOVER, measured through the PERSISTED
@@ -30,16 +29,8 @@ object CrossoverBench {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_VEC_DIR", "target/vec80k")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-crossover-bench")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-crossover-bench", s"local[$cpus]",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
     import spark.implicits._
     import graft.operators.GraphAnn
 
@@ -73,8 +64,7 @@ object CrossoverBench {
     val truthN = truth.count().toDouble
 
     def measure(label: String, cap: Long): (Double, Double, Double, Boolean) = {
-      val p = java.nio.file.Files
-        .createTempDirectory(s"graft-crossover-$label").toString
+      val p = Scratch.dir(s"graft-crossover-$label")
       val (mode, tBuild) = timed(GraphAnn.writeHnswIndex(spark, emb, p, cap))
       def serveOnce() = {
         val t = GraphAnn.hnswTopkFrom(GraphAnn.hnswWalkStored(spark, p))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The INCREMENTAL curation pipeline, measured end to end (VERDICT r14
@@ -27,18 +27,8 @@ object PipelineIncremental {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline-incremental")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-pipeline-incremental", s"local[$cpus]",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
     import spark.implicits._
     import graft.operators.{PipelineIncr, TextAnalysis}
 
@@ -96,16 +86,10 @@ object PipelineIncremental {
     // against the rebuild-from-union insert semantics on BOTH the edge
     // sets and the served top-k (frozen base entries, same serve budget).
     import graft.operators.GraphAnn
-    // both index trees are run-scoped scratch — registered for shutdown
-    // cleanup like every GraphAnn-managed index dir (ADVICE r16)
-    val baseIdxP = java.nio.file.Files
-      .createTempDirectory("graft-incr-ann-base").toString
-    GraphAnn.rmOnExit(baseIdxP)
+    val baseIdxP = Scratch.dir("graft-incr-ann-base")
     val (_, tAnnBase) = timed(
       PipelineIncr.buildAnnIndex(spark, emb, state.keeps, baseIdxP))
-    val updIdxP = java.nio.file.Files
-      .createTempDirectory("graft-incr-ann-upd").toString
-    GraphAnn.rmOnExit(updIdxP)
+    val updIdxP = Scratch.dir("graft-incr-ann-upd")
     val (_, tAnnIngest) = timed(
       PipelineIncr.ingestAnnArrivals(spark, baseIdxP, emb, ingestKeeps, updIdxP))
     val unionKeeps = state.keeps.select("doc_id")

@@ -1,22 +1,22 @@
 package graft
 
-/** Dump `.explain("formatted")` for named queries to files — the
-  * optimization-round evidence artifact (plans/r17/<query>_{before,after}.txt).
+/** Dump `.explain("formatted")` for named queries to files (the plan
+  * snapshots under `plans/`).
   *
   * Usage:
   *   sbt "runMain graft.PlanDump <outDir> <suffix> name1 name2 ..."
   * writes `<outDir>/<name>_<suffix>.txt` per query.
   *
-  * The session mirrors the Bench session's config (shuffle width 8, AQE on,
-  * UTC) at SPARK_GRAFT_SF_DIR (default sf0.1) so the dumped plan is the one
-  * the bench actually runs. The presentation sort is degraded to a plain
+  * The session uses the Bench session's shuffle width (8) at
+  * SPARK_GRAFT_SF_DIR (default sf0.1) so the dumped plan is the one the
+  * bench actually runs. The presentation sort is degraded to a plain
   * orderBy (QueryDef.PlainSortConf) so the inner plan is visible instead of
   * a checkpointed-RDD scan.
   *
   * Queries that run eager work during CONSTRUCTION (localCheckpoint-stepped
-  * iterative paths: the ANN walks, pagerank, NN-descent) still show only
-  * their final frame here; their inner step plans are captured separately
-  * where a round touches them (the per-step helpers are exposed for that).
+  * iterative paths: the ANN walks, pagerank, NN-descent) show only their
+  * final frame here; `perfbench/run.py --trace 1` profiles their jobs and
+  * stages.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -25,14 +25,8 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]").appName("plan-dump")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Sessions.local("plan-dump",
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]", "8")
     s.conf.set(QueryDef.PlainSortConf, "true")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {

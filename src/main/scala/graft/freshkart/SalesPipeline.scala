@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Exprs
+import graft.functions.ExactSum.dsum
 
 /** The FreshKart sales pipeline — the reference's actual product
   * (`src/pyspark/pipeline_pyspark.py:59-224`) re-expressed Spark-first.
@@ -33,10 +34,6 @@ import graft.functions.Exprs
   * individually and the oracle queries reuse the exact production code.
   */
 object SalesPipeline {
-
-  /** Exact, order-independent money sum: decimal in, double out. */
-  private def dsum(c: org.apache.spark.sql.Column) =
-    graft.functions.ExactSum.sumScaled(c, 8) // int128 exact sum — same value as sum(cast(c as decimal(20,8))) on <=15-sig-digit inputs, no per-row BigDecimal (see graft.functions.Int128)
 
   // --- reads (S1, S2) -------------------------------------------------------
 
@@ -228,14 +225,8 @@ object SalesPipeline {
   def main(args: Array[String]): Unit = {
     val settings = if (args.nonEmpty) args(0) else "fixtures/freshkart/settings.yaml"
     val config = Config.load(settings)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("FreshKartSalesPipeline")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("FreshKartSalesPipeline",
+      sys.env.getOrElse("SPARK_MASTER", "local[4]"), "32")
     try run(spark, config)
     finally spark.stop()
   }

@@ -300,14 +300,7 @@ object Dedup {
   def minhashIndexDir(s: SparkSession, dir: String): String =
     minhashIndexDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("dd_minhash_incr", dir) {
       import s.implicits._
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-minhash-index").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-        }
-        rm(new java.io.File(p))
-      }))
+      val p = graft.Scratch.dir("graft-minhash-index")
       val existing = Tables.documents(s, dir)
         .filter($"doc_id" % IncrMod =!= IncrRem)
       val sig = minhashSignatures(docShinglesOf(s, existing, 3), 32)
@@ -1121,10 +1114,8 @@ object Dedup {
       incrMinhashOracle) { (s, dir) =>
       import s.implicits._
       import org.apache.spark.sql.streaming.Trigger
-      val outDir = java.nio.file.Files
-        .createTempDirectory("dd-incr-stream-out").toString
-      val ckDir = java.nio.file.Files
-        .createTempDirectory("dd-incr-stream-ck").toString
+      val outDir = graft.Scratch.dir("dd-incr-stream-out")
+      val ckDir = graft.Scratch.dir("dd-incr-stream-ck")
       incrStreamPass(s, dir, Some("documents.parquet"), outDir, ckDir, dir)
       s.read.option("basePath", outDir).parquet(s"$outDir/batch=*")
         .select($"new_doc", $"old_doc", $"jaccard")

@@ -2,9 +2,10 @@ package graft.operators
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Scratch, Tables}
 import graft.functions.Exprs
 import graft.QueryDef.sqlChecked
+import graft.functions.ExactSum.dsum
 
 /** Distributed source/sink round-trips for the columnar and text formats the
   * Spark distribution ships beyond parquet: ORC, newline-delimited JSON, and
@@ -24,9 +25,6 @@ import graft.QueryDef.sqlChecked
   */
 object Formats {
 
-  private def dsum(c: org.apache.spark.sql.Column) =
-    graft.functions.ExactSum.sumScaled(c, 8) // int128 exact sum — same value as sum(cast(c as decimal(20,8))) on <=15-sig-digit inputs, no per-row BigDecimal (see graft.functions.Int128)
-
   private val oracle =
     """SELECT l_returnflag, COUNT(*) AS n,
       | CAST(SUM(CAST(l_quantity AS DECIMAL(20,8))) AS DOUBLE) AS sum_qty,
@@ -38,7 +36,7 @@ object Formats {
   private def roundTrip(
       s: org.apache.spark.sql.SparkSession, dir: String, format: String) = {
     import s.implicits._
-    val out = Files.createTempDirectory(s"graft-$format-rt").toString
+    val out = Scratch.dir(s"graft-$format-rt")
     val slice = Tables.lineitem(s, dir)
       .filter($"l_orderkey" < 5000)
       .select($"l_orderkey", $"l_returnflag", $"l_quantity", $"l_extendedprice")
@@ -81,7 +79,7 @@ object Formats {
         .filter($"l_orderkey" < 5000)
         .select($"l_orderkey", $"l_returnflag", $"l_quantity", $"l_extendedprice")
       def writeWith(codec: String): String = {
-        val out = scratchDir(s"graft-codec-$codec")
+        val out = Scratch.dir(s"graft-codec-$codec")
         slice.write.mode("overwrite").option("compression", codec).parquet(out)
         out
       }
@@ -128,7 +126,7 @@ object Formats {
         | CAST(SUM(CAST(c_acctbal AS DECIMAL(20,8))) AS DOUBLE) AS sum_bal
         |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val db = Files.createTempDirectory("graft-derby").resolve("db").toString
+      val db = s"${Scratch.dir("graft-derby")}/db"
       val url = s"jdbc:derby:$db;create=true"
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
@@ -276,7 +274,7 @@ object Formats {
       s: org.apache.spark.sql.SparkSession, dir: String): String =
     dynOverwriteDirs.getOrElseUpdate(dir, {
       import s.implicits._
-      val p = scratchDir("graft-dynover")
+      val p = Scratch.dir("graft-dynover")
       val ev = Tables.events(s, dir)
         .withColumn("day", date_format(date_trunc("day", $"ts"), "yyyy-MM-dd"))
       ev.write.mode("overwrite").partitionBy("day").parquet(p)
@@ -409,8 +407,8 @@ object Formats {
     }
 
   /** Versioned-table fixture for io_time_travel (write-once per source dir
-    * per JVM): immutable data files + one manifest per version under the
-    * module scratch root.
+    * per JVM): immutable data files + one manifest per version in a
+    * [[graft.Scratch]] dir.
     */
   private val versionedDirs =
     scala.collection.concurrent.TrieMap.empty[String, String]
@@ -418,13 +416,13 @@ object Formats {
   def versionedTableDir(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
     versionedDirs.getOrElseUpdate(dir, {
-      val root = scratchDir("graft-versioned")
+      val root = Scratch.dir("graft-versioned")
       buildVersionedTable(s, dir, root)
       root
     })
 
   /** Hardlink a FRESH per-call copy of the memoized versioned table into
-    * a new scratch root. The mutating queries (merge, cdf, vacuum) each
+    * a new scratch dir. The mutating queries (merge, cdf, vacuum) each
     * need their own table — sharing the memoized one would make results
     * depend on run order — but in production that table already EXISTS:
     * rebuilding it per call would bill the operator for fixture synthesis
@@ -437,7 +435,7 @@ object Formats {
   private def freshVersionedCopy(
       s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val src = versionedTableDir(s, dir)
-    val root = scratchDir("graft-versioned-copy")
+    val root = Scratch.dir("graft-versioned-copy")
     new java.io.File(src).listFiles().foreach { f =>
       val dst = java.nio.file.Paths.get(s"$root/${f.getName}")
       if (f.getName.endsWith(".parquet"))
@@ -466,10 +464,7 @@ object Formats {
         .find(_.getName.endsWith(".parquet")).get
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(s"$root/$name"))
-      def rm(f: java.io.File): Unit = {
-        val k = f.listFiles(); if (k != null) k.foreach(rm); f.delete()
-      }
-      rm(new java.io.File(tmp))
+      Scratch.rmTree(tmp)
     }
     writeFile("data-a.parquet", orders.filter($"o_orderkey" % 3 === 0))
     writeFile("data-b.parquet", orders.filter($"o_orderkey" % 3 === 1))
@@ -556,10 +551,7 @@ object Formats {
       .find(_.getName.endsWith(".parquet")).get
     java.nio.file.Files.move(part.toPath,
       java.nio.file.Paths.get(s"$root/$name"))
-    def rm(f: java.io.File): Unit = {
-      val k = f.listFiles(); if (k != null) k.foreach(rm); f.delete()
-    }
-    rm(new java.io.File(tmp))
+    Scratch.rmTree(tmp)
   }
 
   /** Write `df` as a PARALLEL immutable file GROUP `root/<base>-<i>.parquet`
@@ -581,10 +573,7 @@ object Formats {
       java.nio.file.Files.move(p.toPath, java.nio.file.Paths.get(s"$root/$name"))
       name
     }.toSeq
-    def rm(f: java.io.File): Unit = {
-      val k = f.listFiles(); if (k != null) k.foreach(rm); f.delete()
-    }
-    rm(new java.io.File(tmp))
+    Scratch.rmTree(tmp)
     names
   }
 
@@ -776,7 +765,7 @@ object Formats {
   def statsTableDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
     statsDirs.getOrElseUpdate(dir, {
       import s.implicits._
-      val root = scratchDir("graft-stats")
+      val root = Scratch.dir("graft-stats")
       val orders = Tables.orders(s, dir)
       val maxKey = orders.agg(max($"o_orderkey")).collect().head.getLong(0)
       val width = maxKey / StatsPruneFiles + 1
@@ -1105,7 +1094,7 @@ object Formats {
       }
       val before = srcAgg()
       // the clone: one manifest write, data lines are absolute refs
-      val cloneRoot = scratchDir("graft-clone")
+      val cloneRoot = Scratch.dir("graft-clone")
       val srcData = java.nio.file.Files
         .readAllLines(java.nio.file.Paths.get(s"$srcRoot/manifest-v3.txt"))
         .asScala.filter(_.nonEmpty).toSeq
@@ -1144,7 +1133,7 @@ object Formats {
   def evoTableDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
     evoDirs.getOrElseUpdate(dir, {
       import s.implicits._
-      val root = scratchDir("graft-evo")
+      val root = Scratch.dir("graft-evo")
       val orders = Tables.orders(s, dir)
       val lines = scala.collection.mutable.Buffer.empty[String]
       for (b <- 0 until EvoBuckets) {
@@ -1434,10 +1423,10 @@ object Formats {
   /** Write-once bucketed (8 buckets on custkey, sorted within) orders and
     * customer tables per source dir. Table names carry the dir hash so
     * alternating source dirs in one session don't collide in the catalog;
-    * data lands under the module scratch root (external tables), cleaned
-    * by the shutdown hook. Bucket count is a layout choice: at 100 TB it
-    * would be sized so bucket ≈ target task size (and both sides MUST
-    * agree — Spark only prunes the shuffle when counts match).
+    * data lands in [[graft.Scratch]] dirs (external tables). Bucket count
+    * is a layout choice: at 100 TB it would be sized so bucket ≈ target
+    * task size (and both sides MUST agree — Spark only prunes the shuffle
+    * when counts match).
     */
   private val bucketedDirs =
     scala.collection.concurrent.TrieMap.empty[String, (String, String)]
@@ -1451,12 +1440,12 @@ object Formats {
       Tables.orders(s, dir).select($"o_custkey", $"o_totalprice")
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .option("path", scratchDir("graft-bkt-orders"))
+        .option("path", Scratch.dir("graft-bkt-orders"))
         .saveAsTable(ot)
       Tables.customer(s, dir).select($"c_custkey", $"c_mktsegment")
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .option("path", scratchDir("graft-bkt-customer"))
+        .option("path", Scratch.dir("graft-bkt-customer"))
         .saveAsTable(ct)
       (ot, ct)
     })
@@ -1483,7 +1472,7 @@ object Formats {
         |FROM events""".stripMargin) { (s, dir) =>
       import s.implicits._
       val smallDir = smallFilesDir(s, dir)
-      val outDir = scratchDir("graft-compacted")
+      val outDir = Scratch.dir("graft-compacted")
       val small = s.read.parquet(smallDir)
       // coalesce can only REDUCE partition count, and the 64-file scan is
       // bin-packed by min(maxPartitionBytes, max(openCost, bytes/cores)) —
@@ -1517,30 +1506,10 @@ object Formats {
 
   def smallFilesDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
     smallFileDirs.getOrElseUpdate(dir, {
-      val p = scratchDir("graft-small-files")
+      val p = Scratch.dir("graft-small-files")
       Tables.events(s, dir).repartition(64).write.mode("overwrite").parquet(p)
       p
     })
-
-  /** Scratch root for this module's derived-layout temp dirs (evolved
-    * vintages, small-files fixtures, compaction outputs) — one shutdown
-    * hook removes the whole tree (the Events.scratchRoot discipline;
-    * partitionedEventsDir keeps its own bespoke hook for historical
-    * reasons).
-    */
-  private lazy val scratchRoot: java.nio.file.Path = {
-    val root = Files.createTempDirectory("graft-formats-scratch")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(p: java.io.File): Unit = {
-        val kids = p.listFiles(); if (kids != null) kids.foreach(rm); p.delete()
-      }
-      rm(root.toFile)
-    }))
-    root
-  }
-
-  private def scratchDir(prefix: String): String =
-    Files.createTempDirectory(scratchRoot, prefix).toString
 
   /** Two-vintage parquet dir for io_schema_evolution (write-once per source
     * dir per JVM, the partitionedEventsDir discipline).
@@ -1551,7 +1520,7 @@ object Formats {
   def evolvedOrdersDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
     evolvedDirs.getOrElseUpdate(dir, {
       import s.implicits._
-      val p = scratchDir("graft-evolved-orders")
+      val p = Scratch.dir("graft-evolved-orders")
       val orders = Tables.orders(s, dir)
       orders.filter($"o_orderkey" % 2 === 0)
         .select($"o_orderkey", $"o_custkey")
@@ -1566,28 +1535,14 @@ object Formats {
     * can assert the physical plan prunes to exactly one partition
     * directory. One partitioned rewrite per SOURCE DIR per JVM (ADVICE
     * r07: a single shared slot meant alternating dirs re-wrote every call
-    * and a concurrent caller could read another dir's data); temp dirs are
-    * registered for deletion on JVM exit.
+    * and a concurrent caller could read another dir's data); the dirs are
+    * [[graft.Scratch]] dirs.
     */
   private val partitionedDirs =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
   def partitionedEventsDir(dir: String): String =
-    partitionedDirs.getOrElseUpdate(dir, {
-      val p = Files.createTempDirectory("graft-part-events")
-      sys.addShutdownHook {
-        import java.nio.file.{Files => F, Path}
-        import scala.jdk.CollectionConverters._
-        if (F.exists(p)) {
-          // close the walk stream before deleting (ADVICE r08: the stream
-          // held an open dir handle at JVM exit)
-          val walk = F.walk(p)
-          val all = try walk.iterator().asScala.toSeq finally walk.close()
-          all.sortBy((x: Path) => -x.getNameCount).foreach(F.deleteIfExists)
-        }
-      }
-      p.toString
-    })
+    partitionedDirs.getOrElseUpdate(dir, Scratch.dir("graft-part-events"))
 
   def partitionedPruneRead(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {

@@ -231,10 +231,8 @@ object GraphAnn {
       .agg(word(0, 32, aName), word(32, EntryBits, bName))
   }
 
-  /** Signature words of a node frame (columns shard, vec_id, v) — exposed
-    * for the seed pins.
-    */
-  private[graft] def memberSigs(elig: DataFrame): DataFrame =
+  /** Signature words of a node frame (columns shard, vec_id, v). */
+  private def memberSigs(elig: DataFrame): DataFrame =
     sigsOf(elig.select(col("shard"), col("vec_id"), col("v")),
       Seq("shard", "vec_id"), "v", "ma", "mb")
 
@@ -242,7 +240,7 @@ object GraphAnn {
     * (query, shard), self excluded, ties by id — `q` is the (query_id,
     * qv, qnrm) frame, `elig` the entry-eligible node frame.
     */
-  private[graft] def seedsOf(q: DataFrame, elig: DataFrame, dk: Int,
+  private def seedsOf(q: DataFrame, elig: DataFrame, dk: Int,
       msigOpt: Option[DataFrame] = None): DataFrame = {
     val msig = msigOpt.getOrElse(memberSigs(elig))
     val qsig = sigsOf(q.select(col("query_id"), col("qv")),
@@ -1305,14 +1303,6 @@ object GraphAnn {
   // Persisted / incremental index plumbing
   // -------------------------------------------------------------------
 
-  private[graft] def rmOnExit(p: String): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-      }
-      rm(new java.io.File(p))
-    }))
-
   /** All layer edge lists as ONE parquet dataset PARTITIONED BY
     * (lvl, shard): an executor serving shard k at layer ℓ reads only
     * `edges/lvl=ℓ/shard=k`, and the layout carries any ladder height.
@@ -1414,7 +1404,7 @@ object GraphAnn {
     * [[NndBuildCap]] vectors, NN-descent above — the serving artifact
     * you'd build at 100 TB never pays the measured-infeasible O(n²/S)
     * join (10B pairs at 200k vectors); upper layers hold n/8^ℓ members
-    * and stay exact in both modes. Removed on JVM exit.
+    * and stay exact in both modes. The dir is a [[graft.Scratch]] dir.
     */
   private val hnswIndexDirs =
     scala.collection.concurrent.TrieMap.empty[String, String]
@@ -1438,9 +1428,7 @@ object GraphAnn {
 
   def hnswIndexDir(s: SparkSession, dir: String): String =
     hnswIndexDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("sim_hnsw_persist", dir) {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-hnsw-index").toString
-      rmOnExit(p)
+      val p = graft.Scratch.dir("graft-hnsw-index")
       writeHnswIndex(s, Tables.embeddings(s, dir), p)
       p
     })
@@ -1457,9 +1445,7 @@ object GraphAnn {
 
   def nndIndexDir(s: SparkSession, dir: String): String =
     nndIndexDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("sim_recall_eval:nnd_index", dir) {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-nnd-index").toString
-      rmOnExit(p)
+      val p = graft.Scratch.dir("graft-nnd-index")
       val nodes = hnswNodes(Tables.embeddings(s, dir)).localCheckpoint()
       val st = ladderStats(nodes)
       writeIndex(p, nodes, nndEdges(s, nodes, nOpt = Some(st.n)),
@@ -1601,9 +1587,7 @@ object GraphAnn {
 
   def hnswIncrIndexDir(s: SparkSession, dir: String): String =
     hnswIncrDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("sim_hnsw_incr", dir) {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-hnsw-incr").toString
-      rmOnExit(p)
+      val p = graft.Scratch.dir("graft-hnsw-incr")
       val nodes = hnswNodes(Tables.embeddings(s, dir)).localCheckpoint()
       val merged = incrMergedEdges(s, nodes)
       writeIndex(p, nodes, merged(0), merged - 0)

@@ -858,7 +858,7 @@ object Multimodal {
     */
   lazy val tarShardDir: String = {
     import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
-    val root = java.nio.file.Files.createTempDirectory("graft-tar-shards")
+    val root = graft.Scratch.dir("graft-tar-shards")
     val imgs = new java.io.File(mediaDir).listFiles()
       .filter(_.getName.matches("img_\\d+\\.png")).sortBy(_.getName)
     for (shard <- 0 until TarShardCount) {
@@ -882,7 +882,7 @@ object Multimodal {
       }
       out.close()
     }
-    root.toString
+    root
   }
 
   /** Distributed webdataset PACKER (write-once per JVM): shard = doc_id %
@@ -893,7 +893,7 @@ object Multimodal {
     */
   def packedShardDir(s: org.apache.spark.sql.SparkSession): String =
     packedDirs.getOrElseUpdate("packed", {
-      val root = java.nio.file.Files.createTempDirectory("graft-tar-pack").toString
+      val root = graft.Scratch.dir("graft-tar-pack")
       packInto(s, root)
       root
     })

@@ -333,14 +333,7 @@ object Similarity {
   def ivfIndexDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
     ivfIndexDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("sim_ivf_persist", dir) {
       import s.implicits._
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-ivf-index").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-        }
-        rm(new java.io.File(p))
-      }))
+      val p = graft.Scratch.dir("graft-ivf-index")
       val e = embWithNorm(s, dir)
       val centroids = ivfCentroids(s, dir)
       centroids.write.mode("overwrite").parquet(s"$p/centroids")
@@ -422,14 +415,7 @@ object Similarity {
   def ivfIncrIndexDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
     ivfIncrDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("sim_ivf_incr", dir) {
       import s.implicits._
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-ivf-incr").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-        }
-        rm(new java.io.File(p))
-      }))
+      val p = graft.Scratch.dir("graft-ivf-incr")
       val e = embWithNorm(s, dir)
       val base = e.filter($"vec_id" % 7 =!= 3)
       val centroids = centroidsOf(s,

@@ -117,8 +117,8 @@ object TextAnalysis {
     * packed language trigrams, and materializes them to parquet. Every
     * ta_pipeline_e2e stage then reads this table (column-pruned) instead of
     * re-tokenizing the corpus — at 100 TB this is the real topology: text
-    * is touched once, stages consume stored features. The dir is removed
-    * on JVM exit (the Formats scratchRoot discipline).
+    * is touched once, stages consume stored features. The dir is a
+    * [[graft.Scratch]] dir.
     */
   private val curationDirs =
     scala.collection.concurrent.TrieMap.empty[String, String]
@@ -127,14 +127,7 @@ object TextAnalysis {
       dir: String): String =
     curationDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("ta_curation_intermediate", dir) {
       import s.implicits._
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-curation-ti").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-        }
-        rm(new java.io.File(p))
-      }))
+      val p = graft.Scratch.dir("graft-curation-ti")
       val st = Exprs.textStats($"text")
       Tables.documents(s, dir)
         .select(

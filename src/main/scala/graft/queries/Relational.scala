@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.QueryDef.sqlChecked
 import graft.functions.Exprs
+import graft.functions.ExactSum.dsum
 
 /** The reference's relational operator surface (SURVEY §2.1-§2.10) re-expressed
   * over the driver testdata star schema, one verifiable query per operator
@@ -21,17 +22,8 @@ import graft.functions.Exprs
   */
 object Relational {
 
-  /** Exact, order-independent money sum: int128-accumulated unscaled longs
-    * (scale 8), double out — same value as the original
-    * `sum(cast(c as decimal(20,8)))` on every money-like input (raw
-    * 2-decimal columns and exact ≤4-decimal products), ~2.7× faster per row
-    * because the agg buffer stays two fixed-width longs instead of a
-    * serialized BigDecimal (see [[graft.functions.Int128]]).
-    */
-  private def dsum(c: org.apache.spark.sql.Column) =
-    graft.functions.ExactSum.sumScaled(c, 8)
-
-  /** Decimal-cast money sum for inputs whose significant digits at scale 8
+  /** Decimal-cast money sum ([[graft.functions.ExactSum.dsum]]'s
+    * decimal-buffer twin) for inputs whose significant digits at scale 8
     * can exceed a double's ~15.9 exact decimal digits (q18's `p*p`
     * co-moments reach ~18): Spark's via-string double→decimal cast is the
     * pinned cross-engine semantics there, so those sums stay on the decimal

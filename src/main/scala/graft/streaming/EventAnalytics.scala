@@ -4,8 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Scratch, Tables}
 import graft.QueryDef.sqlChecked
+import graft.functions.ExactSum.dsum
 
 /** Event-analytics operators over the `events` table, beyond the windowing /
   * sessionization surface in [[Events]]: conversion funnels, cohort
@@ -19,9 +20,6 @@ import graft.QueryDef.sqlChecked
   * product-analytics primitive, shaped so no step is O(n²) or driver-bound.
   */
 object EventAnalytics {
-
-  private def dsum(c: org.apache.spark.sql.Column) =
-    graft.functions.ExactSum.sumScaled(c, 8) // int128 exact sum — see graft.functions.Int128
 
   private val TsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
@@ -461,8 +459,8 @@ object EventAnalytics {
         |                    FROM events GROUP BY user_id) t ON e.user_id = t.user_id
         |WHERE e.event_type = 'purchase' ORDER BY e.event_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val outDir = Events.streamTmpDir("ev-ss-static-out")
-      val ckDir = Events.streamTmpDir("ev-ss-static-ck")
+      val outDir = Scratch.dir("ev-ss-static-out")
+      val ckDir = Scratch.dir("ev-ss-static-ck")
       val static = Tables.events(s, dir)
         .groupBy($"user_id").agg(count(lit(1)).as("n_total"))
       Events.withStreamPartitions(s) {
@@ -573,8 +571,8 @@ object EventAnalytics {
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
       import s.implicits._
       val srcDir = upsertSrcDir(s, dir)
-      val outDir = Events.streamTmpDir("ev-upsert-out")
-      val ckDir = Events.streamTmpDir("ev-upsert-ck")
+      val outDir = Scratch.dir("ev-upsert-out")
+      val ckDir = Scratch.dir("ev-upsert-ck")
       upsertStreamPass(s, srcDir, outDir, ckDir)
       upsertState(s, outDir)
         .transform(d => QueryDef.largeSort(d, $"user_id"))
@@ -834,7 +832,7 @@ object EventAnalytics {
 
   private def upsertSrcDir(s: org.apache.spark.sql.SparkSession, dir: String): String =
     upsertSrcDirs.getOrElseUpdate(dir, graft.ColdBuilds.timed("ev_upsert_src", dir) {
-      val p = Events.streamTmpDir("ev-upsert-src")
+      val p = Scratch.dir("ev-upsert-src")
       Tables.events(s, dir).repartition(4)
         .write.mode("overwrite").parquet(p)
       p
@@ -881,7 +879,7 @@ object EventAnalytics {
       s: org.apache.spark.sql.SparkSession, dir: String, cutoff: String): String =
     incrStateDirs.getOrElseUpdate(s"$dir|$cutoff", graft.ColdBuilds.timed(s"ev_incr_rollup_state@$cutoff", dir) {
       import s.implicits._
-      val p = java.nio.file.Files.createTempDirectory("graft-incr-state").toString
+      val p = Scratch.dir("graft-incr-state")
       Tables.events(s, dir)
         .filter($"ts" < lit(cutoff).cast("timestamp"))
         .withColumn("day", date_format(date_trunc("day", $"ts"), "yyyy-MM-dd"))

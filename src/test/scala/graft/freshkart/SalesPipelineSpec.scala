@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
-import graft.SparkSuite
+import graft.{Scratch, SparkSuite}
 
 /** End-to-end + trap-semantics specs for the FreshKart pipeline over the
   * committed fixtures (SURVEY §7.1 trap list; golden files are the
@@ -96,7 +96,7 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
     oc.count() shouldBe result.ordersClean.count()
     Files.readString(Paths.get(s"$out/sales.db.parquet/MANIFEST")).trim
       .split("\n").toSeq shouldBe Seq("daily_city_sales", "orders_clean")
-    Sinks.deleteRecursively(new java.io.File(out))
+    Scratch.rmTree(out)
   }
 
   test("golden: daily_summary_all.csv = header + per-day rows concatenated in date order") {
@@ -119,7 +119,7 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
     val allLines = all.linesIterator.toSeq
     allLines.head shouldBe "date;city;channel;orders_count;unique_customers;items_sold;gross_revenue_eur;refunds_eur;net_revenue_eur"
     allLines.tail shouldBe perDay.toSeq
-    Sinks.deleteRecursively(new java.io.File(out))
+    Scratch.rmTree(out)
   }
 
   test("per-day fan-out writes one file per distinct date, all 31 days") {
@@ -131,7 +131,7 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
     files.length shouldBe 31
     files.head shouldBe "daily_summary_20250301.csv"
     files.last shouldBe "daily_summary_20250331.csv"
-    Sinks.deleteRecursively(new java.io.File(out))
+    Scratch.rmTree(out)
   }
 
   test("partitioned parquet sink: date= subdirs, pruned scan, round-trip") {
@@ -149,7 +149,7 @@ class SalesPipelineSpec extends SparkSuite with Matchers {
     prunedPlan should include("PartitionFilters")
     prunedPlan should include("= 2025-03-15")
     pruned.count() shouldBe daily.filter(col("date") === "2025-03-15").count()
-    Sinks.deleteRecursively(new java.io.File(out).getParentFile)
+    Scratch.rmTree(new java.io.File(out).getParent)
   }
 
   test("Config: yaml subset parse + relative path resolution") {

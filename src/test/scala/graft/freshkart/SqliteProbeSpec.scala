@@ -3,7 +3,7 @@ package graft.freshkart
 import java.nio.file.{Files, Paths}
 
 import org.scalatest.matchers.should.Matchers
-import graft.SparkSuite
+import graft.{Scratch, SparkSuite}
 
 /** S7 — the SQLite sink probe. In this offline environment no sqlite-jdbc
   * jar is resolvable (Spark ships Derby only), so the expected state here is
@@ -38,6 +38,6 @@ class SqliteProbeSpec extends SparkSuite with Matchers {
       spark.read.parquet(s"$dbPath.parquet/t1").count() shouldBe 2
       new String(Files.readAllBytes(Paths.get(s"$dbPath.parquet/MANIFEST"))).trim shouldBe "t1"
     }
-    Sinks.deleteRecursively(new java.io.File(out))
+    Scratch.rmTree(out)
   }
 }

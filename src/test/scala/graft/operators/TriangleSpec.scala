@@ -33,6 +33,20 @@ class TriangleSpec extends SparkSuite with Matchers {
     r.getLong(3) should be <= 1L
   }
 
+  test("triangle valve: broadcast and shuffle branches count K5 = 10, pendant = 1") {
+    // any acyclic orientation counts each triangle once; u < v is one.
+    // Only counts are asserted: on inputs this small AQE may broadcast
+    // either plan.
+    def closures(edges: Seq[(Long, Long)], nEdges: Long): Long =
+      Graph.triangleClosures(spark, edges.toDF("x", "y"), nEdges).count()
+    val k5 = for { u <- 0L until 5L; v <- (u + 1) until 5L } yield (u, v)
+    val pendant = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
+    for ((g, want) <- Seq(k5 -> 10L, pendant -> 1L)) {
+      closures(g, g.size.toLong) shouldBe want // at or under the cap
+      closures(g, Long.MaxValue) shouldBe want // above the cap
+    }
+  }
+
   test("triangle with a pendant: exactly 1, bound gate true") {
     val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
     val r = profile(g)
